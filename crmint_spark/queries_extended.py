@@ -935,11 +935,12 @@ FROM events GROUP BY event_type
 
 
 def streaming_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState running per-user profiles in update mode,
-    drained over two micro-batches so the state accumulates across
-    triggers. Each batch appends that batch's updated groups; the final
-    state per user is the row with the highest (monotonic) event count.
-    Oracle-checked against the batch per-user aggregate."""
+    """Running per-user profiles (a streaming ``groupBy().agg`` on the
+    built-in state store) in update mode, drained over two
+    micro-batches so the state accumulates across triggers. Each batch
+    appends that batch's updated groups; the final state per user is
+    the row with the highest (monotonic) event count. Oracle-checked
+    against the batch per-user aggregate."""
     from .streaming.events import run_to_table, stream_events_from_dir
     from .streaming.stateful import user_running_profile
 

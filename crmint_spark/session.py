@@ -106,6 +106,16 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    # Python workers start in the JVM's working directory, so outside
+    # the repo they could not import the crmint_spark modules that
+    # pickled UDFs reference: put the package's parent directory on
+    # their path, after any path the caller passes.
+    extra_conf = dict(extra_conf or {})
+    py_key = "spark.executorEnv.PYTHONPATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    extra_conf[py_key] = os.pathsep.join(
+        p for p in (extra_conf.get(py_key), root) if p
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

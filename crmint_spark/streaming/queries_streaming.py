@@ -7,10 +7,11 @@ resuming an old checkpoint would skip the input, which is both wrong
 and result-caching), memory/foreachBatch sink — and returns a bounded
 DataFrame whose values a DuckDB oracle replays relationally.
 
-Guide §4 applied to the stateful operators: the applyInPandasWithState
-groups ship ONLY the columns the state function reads (the stream
-carries 6 columns; the profile needs 3, the dedup 3), so the
-JVM->Python Arrow boundary moves half the bytes.
+The dedup and running-profile entries run on Spark's built-in state
+operators (``dropDuplicates``, streaming ``groupBy().agg``), so their
+per-key state never crosses into Python. Each projects the stream to
+the columns its operator reads (the stream carries 6 columns; the
+profile needs 3, the dedup 3) before the state shuffle.
 """
 
 from __future__ import annotations
@@ -125,19 +126,19 @@ def _drain_to_memory(
     at first batch and every partition is a checkpointed store (a
     stream-stream join keeps FOUR per partition, each fsynced per
     batch) — size it to the micro-batch state volume instead of the
-    batch session's scan parallelism (guide §2/§5; env
-    SPARK_GRAFT_STREAM_SHUFFLE, production ingestion sizes this to
-    sustained state volume per core)."""
+    batch session's scan parallelism (guide §2/§5; production ingestion
+    sizes this to sustained state volume per core). ``None`` keeps the
+    session's partitions.
+
+    The sink's temp view is dropped before returning: the returned
+    DataFrame holds the sink itself, so no view outlives the call."""
     spark = stream_df.sparkSession
     name = f"__stream_q_{uuid.uuid4().hex[:10]}"
     ckpt = _scratch_dir("crmint_stream_ckpt_")
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     if state_shuffle is not None:
-        spark.conf.set(
-            key,
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(state_shuffle)),
-        )
+        spark.conf.set(key, str(state_shuffle))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -150,7 +151,9 @@ def _drain_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # -- 1. watermarked tumbling-window aggregation ------------------------------
@@ -223,7 +226,7 @@ FROM per_session GROUP BY user_id
 """
 
 
-# -- 3. stateful exact dedup (applyInPandasWithState) ------------------------
+# -- 3. stateful exact dedup (dropDuplicates) --------------------------------
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,15 +235,10 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_ndjson_dir(spark, sf_dir, dup=True),
         timestamp_format=_TS_FMT,
     )
-    # guide §4: ship only the columns the state function reads; the
-    # micro-driver scopes to a deterministic 1/8th of the key space —
-    # per-key Python state dominates the cost linearly (~60 us/key
-    # measured), so the subset keeps the drift tripwire cheap while
-    # pytest covers the full width
+    # full key width: each key's marker stays in the JVM state store;
+    # projecting first keeps the state shuffle to 3 columns
     deduped = stateful.streaming_dedup_by_key(
-        stream.where("event_id % 8 = 0").select(
-            "event_id", "user_id", "event_type"
-        )
+        stream.select("event_id", "user_id", "event_type")
     )
     out = _drain_to_memory(deduped, "append", state_shuffle=None)
     return out.groupBy("event_type").agg(
@@ -253,11 +251,11 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_DEDUP_SQL = """
 SELECT event_type, COUNT(*) AS n_first, COUNT(*) AS sum_first,
        CAST(SUM(user_id) AS BIGINT) AS sum_users
-FROM events WHERE event_id % 8 = 0 GROUP BY event_type
+FROM events GROUP BY event_type
 """
 
 
-# -- 4. stateful running profile (applyInPandasWithState) --------------------
+# -- 4. stateful running profile (streaming groupBy().agg) ------------------
 
 
 def streaming_running_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

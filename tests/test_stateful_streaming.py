@@ -1,4 +1,6 @@
-"""applyInPandasWithState + stream-static join tests."""
+"""Stateful streaming operator tests: built-in dedup and running
+profile (plans, results, state size), the applyInPandasWithState TTL
+dedup, and the stream-static join."""
 
 from __future__ import annotations
 
@@ -183,3 +185,90 @@ def test_ndjson_drops_coexist_per_dup_flavor(spark):
     assert plain1 == plain2 and os.path.isdir(plain1)
     assert dup1 == dup2 and os.path.isdir(dup1)
     assert plain1 != dup1
+
+
+_PANDAS_STATE = "FlatMapGroupsInPandasWithState"
+
+
+def _logical_plan(df) -> str:
+    return df._jdf.queryExecution().logical().toString()
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_exact_operators_plan_on_builtin_state(spark, stream_dir):
+    """Profile and no-TTL dedup keep their state in the JVM state store
+    and keep their declared output schemas; only the processing-time
+    TTL dedup plans a pandas state function."""
+    stream = sevents.stream_events_from_dir(spark, stream_dir)
+    profile = stateful.user_running_profile(stream)
+    deduped = stateful.streaming_dedup_by_key(stream)
+    assert _PANDAS_STATE not in _logical_plan(profile)
+    assert _PANDAS_STATE not in _logical_plan(deduped)
+    assert _fields(profile.schema) == _fields(stateful.PROFILE_SCHEMA)
+    assert _fields(deduped.schema) == _fields(stateful.DEDUP_SCHEMA)
+    assert _PANDAS_STATE in _logical_plan(
+        stateful.streaming_dedup_by_key(stream, ttl_ms=1000)
+    )
+
+
+def _state_rows_per_batch(stream_df, tmp_path, name, output_mode):
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress
+        if p["numInputRows"] > 0
+    ]
+
+
+def test_builtin_state_levels_off_across_batches(spark, tmp_path):
+    """The same events dropped twice, one file per trigger: the second
+    batch adds input but no state rows — one row per distinct event id
+    for dedup, one per distinct user for the profile."""
+    in_dir = str(tmp_path / "in")
+    ev = load(spark, "/root/testdata/sf0.001", "events").coalesce(1)
+    ev.write.json(in_dir)
+    ev.write.mode("append").json(in_dir)
+    n_ids = ev.select("event_id").distinct().count()
+    n_users = ev.select("user_id").distinct().count()
+
+    def stream():
+        return sevents.stream_events_from_dir(
+            spark, in_dir, max_files_per_trigger=1
+        )
+
+    dedup_rows = _state_rows_per_batch(
+        stateful.streaming_dedup_by_key(stream()),
+        tmp_path, "state_dedup", "append",
+    )
+    assert dedup_rows == [n_ids, n_ids]
+    assert spark.table("state_dedup").count() == n_ids
+    profile_rows = _state_rows_per_batch(
+        stateful.user_running_profile(stream()),
+        tmp_path, "state_profile", "update",
+    )
+    assert profile_rows == [n_users, n_users]
+
+
+def test_stream_entries_release_memory_sinks(spark):
+    """A drained entry's result stays readable after its memory-sink
+    view is dropped, and no sink view outlives the call."""
+    from crmint_spark.streaming import queries_streaming as qs
+
+    df = qs.streaming_dedup_keys(spark, "/root/testdata/sf0.001")
+    assert df.count() > 0
+    assert not [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("__stream_q_")
+    ]

@@ -155,10 +155,10 @@ PROBE = [
     # is session-scoped fixture plumbing, paid in the untimed warm
     # run). Expectations: windowed/sessionized scale with the event
     # volume through the pinned 8-partition state stores (state is MBs
-    # — the pin must NOT serialize compute); dedup's per-key pandas
-    # state is linear in the key count (event_id % 8 scope shifts keep
-    # the same density per copy — SHIFT is divisible by 8); the
-    # interval join's state stays bounded by the two-sided time
+    # — the pin must NOT serialize compute); dedup and the running
+    # profile keep one built-in state-store row per key, so their state
+    # grows with the key count while the per-key cost stays in the JVM;
+    # the interval join's state stays bounded by the two-sided time
     # predicate at any volume.
     "streaming_windowed_counts",
     "streaming_sessionized",
